@@ -22,9 +22,13 @@ mirroring the reference's librosa-absent degradation paths at
 :143-157, :184-187). Numeric parity with librosa is NOT claimed; the
 decision semantics (thresholds, votes, retry) are.
 
-Spark shape: everything runs inside ONE Arrow-batched pandas UDF per
-clip row — samples are already clip-local (sliced JVM-side before
-this stage), so no decoded audio ever crosses a shuffle.
+Spark shape: the gate runs once per RECORDING. ``recording_clips``
+joins each pair's small clip list (broadcast) to its PCM row, so the
+samples never cross an exchange; one pandas-UDF pass per recording
+then cuts every clip's envelope in numpy, assembles the base clip once
+(``clip_bases``) and applies ``gate_clip``. The export sink
+(sinks.exports.export_clip_files) runs the same per-clip steps and
+writes the piece ``gate_clip`` returns, in the same pass.
 """
 
 from __future__ import annotations
@@ -144,25 +148,70 @@ def boundary_leakage(
     return sum(votes) >= 2, details
 
 
-ACOUSTIC_SCHEMA = (
-    "pair_id long, group_id long, e_ms_final long, verdict string, "
-    "log_quality string, tsv_quality string, "
+VERDICT_FIELDS = (
+    "e_ms_final long, verdict string, log_quality string, tsv_quality string, "
     "dbfs double, mfcc_dist double, flux double, votes bigint"
 )
+ACOUSTIC_SCHEMA = "pair_id long, group_id long, " + VERDICT_FIELDS
+_RETRY_SHIFT_MS = 30  # the F7 retry ends the clip this much earlier (:630)
 
 
-def acoustic_gate(
-    clips_sliced: DataFrame,
-    min_dur_s: float | None = None,
-    retry_shift_ms: int = 30,
-) -> DataFrame:
-    """F7: per-clip acoustic boundary gate with one retry — the exact
-    decision flow of claude_research_optimal.py:608-656.
+def _apply_fades(pcm: np.ndarray, frame_rate: int, fade_ms: int = 30) -> np.ndarray:
+    """C11 asymmetric fades (claude_research_optimal.py:600-606):
+    fade-in = min(max(5, fade_ms//3), len/4) ms, fade-out =
+    min(fade_ms, len/4) ms, linear amplitude ramps."""
+    n = len(pcm)
+    if n == 0:
+        return pcm
+    len_ms = n * 1000 // frame_rate
+    fin_ms = min(max(5, fade_ms // 3), len_ms // 4)
+    fout_ms = min(fade_ms, len_ms // 4)
+    fin = int(fin_ms * frame_rate / 1000)
+    fout = int(fout_ms * frame_rate / 1000)
+    out = pcm.copy()
+    if fin > 0:
+        out[:fin] *= np.linspace(0.0, 1.0, fin, endpoint=False, dtype=np.float32)
+    if fout > 0:
+        out[-fout:] *= np.linspace(1.0, 0.0, fout, endpoint=False, dtype=np.float32)[::-1]
+    return out
 
-    Input rows: the ``_clips_with_samples`` shape — envelope PCM plus
-    piece spans and the validated [s_ms, e_ms] window. Per clip:
 
-    - assemble the base clip, slice the window, apply final fades, and
+def _slice_ms(base: np.ndarray, s_ms: int, e_ms: int, frame_rate: int) -> np.ndarray:
+    """pydub-style ms slice (clamping, empty on inverted range)."""
+    spms = frame_rate // 1000
+    return base[s_ms * spms : max(s_ms, e_ms) * spms]
+
+
+def _assemble_base(
+    pcm: np.ndarray, piece_spans, frame_rate: int, fade_ms: int, seam_ms: int
+) -> np.ndarray:
+    """numpy analog of assemble_runs_to_clip
+    (claude_research_optimal.py:308-341): cut the clip's ENVELOPE (first
+    piece start → last piece end) from the recording, then per-piece
+    fades and seam silence between pieces, spans rebased to the
+    envelope."""
+    spms = frame_rate // 1000
+    env_s, env_e = int(piece_spans[0]["s"]), int(piece_spans[-1]["e"])
+    env = pcm[env_s * spms : env_e * spms]
+    parts: list[np.ndarray] = []
+    last = len(piece_spans) - 1
+    for i, span in enumerate(piece_spans):
+        seg = env[(int(span["s"]) - env_s) * spms : (int(span["e"]) - env_s) * spms]
+        parts.append(_apply_fades(seg, frame_rate, fade_ms))
+        if i != last and seam_ms > 0:
+            parts.append(np.zeros(seam_ms * spms, dtype=np.float32))
+    return np.concatenate(parts) if parts else np.zeros(0, dtype=np.float32)
+
+
+def gate_clip(
+    base: np.ndarray, s_ms: int, e_ms: int, sr: int, min_dur_ms: int, fade_ms: int
+) -> tuple[tuple, np.ndarray | None]:
+    """F7 on one assembled base clip — the exact decision flow of
+    claude_research_optimal.py:608-656. Returns the verdict fields
+    (``VERDICT_FIELDS`` order) and the piece to export (None when
+    rejected):
+
+    - slice the validated [s_ms, e_ms] window, apply final fades, and
       check the last-50 ms boundary of THAT faded piece (:610-613)
     - the acoustic LOG records ``leakage``/``clean`` from this first
       check — even when a retry later fixes the clip, the log keeps
@@ -170,80 +219,93 @@ def acoustic_gate(
     - on a leak: retry at e_ms−30 ONLY if that still satisfies
       min_dur; the retry slice comes from the UNFADED base clip and is
       checked at its very end (:630-632, both reference quirks);
-      accepted → verdict ``keep`` with the shortened e_ms and
-      tsv quality ``fixed`` (and the exported piece stays unfaded,
-      :633-636); still leaking → reject ``acoustic_leakage``
+      accepted → ``keep`` with the shortened e_ms and tsv quality
+      ``fixed``, exporting that unfaded slice (:633-636); still leaking
+      → reject ``acoustic_leakage`` (the rejection log carries the
+      ORIGINAL check's details, :639-644)
     - retry impossible (min-dur) → reject ``acoustic_leakage_unfixable``
       (:645-652)
     """
+    piece = _apply_fades(_slice_ms(base, s_ms, e_ms, sr), sr, fade_ms)
+    leak, d = boundary_leakage(piece, sr, max(0, len(piece) * 1000 // sr - 50))
+    facts = (d["dbfs"], d["mfcc_dist"], d["flux"], d["votes"])
+    if not leak:
+        return (e_ms, "keep", "clean", "clean", *facts), piece
+    e_retry = e_ms - _RETRY_SHIFT_MS
+    if e_retry <= s_ms + min_dur_ms:
+        return (e_ms, "acoustic_leakage_unfixable", "leakage", "clean", *facts), None
+    piece = _slice_ms(base, s_ms, e_retry, sr)
+    if boundary_leakage(piece, sr, len(piece) * 1000 // sr)[0]:
+        return (e_ms, "acoustic_leakage", "leakage", "clean", *facts), None
+    return (e_retry, "keep", "leakage", "fixed", *facts), piece
+
+
+def recording_clips(clips: DataFrame, audio: DataFrame) -> DataFrame:
+    """One row per recording: ``(pair_id, frame_rate, samples, clips)``
+    with ``clips`` = array<struct<group_id, seg_text, piece_spans, s_ms,
+    e_ms>> in group_id order. Only the small per-pair clip list moves
+    (collected, then broadcast); the samples stay in the partitions
+    that derived them and never cross an exchange."""
+    per_pair = clips.groupBy("pair_id").agg(
+        F.array_sort(
+            F.collect_list(
+                F.struct("group_id", "seg_text", "piece_spans", "s_ms", "e_ms")
+            )
+        ).alias("clips")
+    )
+    return audio.select("pair_id", "frame_rate", "samples").join(
+        F.broadcast(per_pair), "pair_id"
+    )
+
+
+def clip_bases(r, fade_ms: int, seam_ms: int) -> Iterator[tuple[dict, np.ndarray]]:
+    """(clip, assembled base clip) for each clip of one
+    :func:`recording_clips` row, in group_id order."""
+    pcm = np.asarray(r.samples, dtype=np.float32)
+    for c in r.clips:
+        yield c, _assemble_base(pcm, c["piece_spans"], int(r.frame_rate), fade_ms, seam_ms)
+
+
+def acoustic_gate(recordings: DataFrame) -> DataFrame:
+    """F7: per-clip acoustic boundary gate with one retry
+    (:func:`gate_clip`) over :func:`recording_clips` rows — one verdict
+    row per clip, ``ACOUSTIC_SCHEMA``. The export runs the same steps
+    inside its own per-recording pass; this is the standalone entry
+    point."""
+    from ..plans.pipeline import P
+
+    min_dur_ms = int(P.min_dur_s * 1000)
+    columns = [f.split()[0] for f in ACOUSTIC_SCHEMA.split(", ")]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..plans.pipeline import P
-        from ..sinks.exports import _apply_fades, _assemble_base, _slice_ms
-
-        min_dur_ms = int((P.min_dur_s if min_dur_s is None else min_dur_s) * 1000)
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
                 sr = int(r.frame_rate)
-                s_ms, e_ms = int(r.s_ms), int(r.e_ms)
-                base = _assemble_base(
-                    np.asarray(r.samples, dtype=np.float32),
-                    r.rel_spans, sr, P.fade_ms, P.seam_silence_ms,
-                )
-                piece = _apply_fades(_slice_ms(base, s_ms, e_ms, sr), sr, P.fade_ms)
-                check_pos = max(0, len(piece) * 1000 // sr - 50)
-                leak, d = boundary_leakage(piece, sr, check_pos)
-                log_quality = "leakage" if leak else "clean"
-                verdict, tsv_quality, e_final = "keep", "clean", e_ms
-                if leak:
-                    e_retry = e_ms - retry_shift_ms
-                    if e_retry > s_ms + min_dur_ms:
-                        piece_retry = _slice_ms(base, s_ms, e_retry, sr)
-                        leak2, _d2 = boundary_leakage(
-                            piece_retry, sr, len(piece_retry) * 1000 // sr
-                        )
-                        if not leak2:
-                            verdict, tsv_quality, e_final = "keep", "fixed", e_retry
-                        else:
-                            # the rejection log carries the ORIGINAL
-                            # check's details (:639-644)
-                            verdict = "acoustic_leakage"
-                    else:
-                        verdict = "acoustic_leakage_unfixable"
-                rows.append(
-                    (int(r.pair_id), int(r.group_id), int(e_final), verdict,
-                     log_quality, tsv_quality,
-                     d["dbfs"], d["mfcc_dist"], d["flux"], d["votes"])
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["pair_id", "group_id", "e_ms_final", "verdict",
-                         "log_quality", "tsv_quality",
-                         "dbfs", "mfcc_dist", "flux", "votes"],
-            )
+                for c, base in clip_bases(r, P.fade_ms, P.seam_silence_ms):
+                    verdict, _ = gate_clip(
+                        base, int(c["s_ms"]), int(c["e_ms"]), sr, min_dur_ms, P.fade_ms
+                    )
+                    rows.append((int(r.pair_id), int(c["group_id"]), *verdict))
+            yield pd.DataFrame(rows, columns=columns)
 
-    return clips_sliced.select(
-        "pair_id", "group_id", "frame_rate", "samples", "rel_spans", "s_ms", "e_ms"
-    ).mapInPandas(run, ACOUSTIC_SCHEMA)
+    return recordings.mapInPandas(run, ACOUSTIC_SCHEMA)
 
 
 @register("acoustic_boundary_gate", tags=("dsp", "udf"))
 def acoustic_boundary_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C8-C10+F7 through the full Spark path on a deterministic pair
-    subset: slice clip PCM JVM-side, vote on the end boundary in one
-    pandas-UDF pass, retry once. Rows-only check (spectral kernels are
-    implementation-specific); decision semantics pinned by
-    tests/test_dsp.py on constructed signals."""
+    subset: one pandas-UDF pass per recording cuts each clip from the
+    PCM, votes on its end boundary, retries once. Rows-only check
+    (spectral kernels are implementation-specific); decision semantics
+    pinned by tests/test_dsp.py on constructed signals."""
     from ..plans.pipeline import full_pipeline
-    from ..sinks.exports import _clips_with_samples
     from ..sources import fixtures
 
     stages = full_pipeline(spark, sf_dir)
     sub = stages["exported"].filter(F.col("pair_id") % 20 == 0)
-    audio = fixtures.audio_samples(spark, sf_dir)
-    sliced = _clips_with_samples(sub, audio)
-    return acoustic_gate(sliced).orderBy("pair_id", "group_id")
+    audio = fixtures.audio_samples(spark, sf_dir).filter(F.col("pair_id") % 20 == 0)
+    return acoustic_gate(recording_clips(sub, audio)).orderBy("pair_id", "group_id")
 
 
 # ---------------------------------------------------------------------

@@ -21,6 +21,14 @@ from pyspark.sql import SparkSession
 __all__ = ["get_spark"]
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical RAM in whole GiB (at least 1g): the
+    driver JVM's heap, its off-heap and the Python workers must all fit
+    in RAM together."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, ram // 2 // 2**30)}g"
+
+
 def get_spark(
     app_name: str = "asr_training_data_pipeline_spark",
     cpus: int | None = None,
@@ -29,7 +37,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the session.
 
-    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` then to all cores.
+    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` then to all cores;
+    ``driver_memory`` to ``$SPARK_GRAFT_DRIVER_MEM`` then to half the
+    physical RAM.
     Shuffle partitions follow the core count — at 100 TB on a real
     cluster the operative knobs become ``initialPartitionNum`` and
     AQE coalescing, which are pre-wired here.
@@ -37,7 +47,9 @@ def get_spark(
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     if driver_memory is None:
-        driver_memory = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g")
+        driver_memory = os.environ.get(
+            "SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()
+        )
 
     # Python workers (and the custom daemon module below) import this
     # package by name. The driver may have found it via cwd/sys.path,

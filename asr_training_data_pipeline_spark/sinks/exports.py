@@ -13,17 +13,25 @@ batch_processor.py:100-110):
 - ``word_coverage.csv``                                (K6, batch_processor.py:39-45)
 - ``batch_summary.json``                               (K7, batch_processor.py:177-179)
 
-Execution model at scale: every per-row/per-group file export runs ON
-THE EXECUTORS (mapInPandas / applyInPandas writing to shared storage)
-and returns a manifest DataFrame — the driver never holds file bytes.
-Tabular sinks are plain ``df.write`` (distributed part files). The
-only driver-side write is ``summary.json`` — a single aggregate row
-by construction.
+Execution model: ONE pass over the audio per recording. Each pair's
+exported clips are collected into a small list and broadcast-joined to
+the pair's PCM row (the samples never cross an exchange), and one
+mapInPandas task per recording (``export_clip_files``) runs the F7
+acoustic gate on each clip and writes the kept clip's WAV/TXT and the
+recording's full corpus from the piece the gate computed. That pass is
+pinned in one cache slot holding only verdict and manifest rows (no
+PCM), materialized before ``export_pipeline_outputs`` returns, so every
+file is written exactly once; the acoustic log, rejections, clips.tsv,
+coverage CSV, summary and batch summary all read the held rows.
+Tabular sinks are plain ``df.write`` (distributed part files). The only
+driver-side write is ``summary.json`` — a single aggregate row by
+construction.
 
 WAV encode is REAL (stdlib ``wave``, 16-bit PCM) — no codec library
 needed; fades (C11, claude_research_optimal.py:330-333,600-606) and
 silence seams (C12, :337,478,669) are numpy ramps/zeros applied in
-the writer, the last point where decoded samples exist.
+the per-recording pass, where the decoded samples live
+(operators.dsp.clip_bases / gate_clip).
 """
 
 from __future__ import annotations
@@ -38,15 +46,21 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import hold
+from ..operators.dsp import VERDICT_FIELDS, clip_bases, gate_clip, recording_clips
 from ..plans.pipeline import P, PipelineParams, full_pipeline
 from ..sources import fixtures
 
 MANIFEST_SCHEMA = (
     "pair_id long, group_id long, kind string, n_bytes bigint, n_frames bigint"
 )
+# The per-recording pass emits manifest rows (verdict fields null) and
+# one kind='verdict' row per gated clip (file fields null).
+EXPORT_SCHEMA = MANIFEST_SCHEMA + ", " + VERDICT_FIELDS
+_EXPORT_COLUMNS = [f.split()[0] for f in EXPORT_SCHEMA.split(", ")]
+_NO_VERDICT = (None,) * len(VERDICT_FIELDS.split(", "))
 
 _FRAME_RATE = 16000
-_SAMPLES_PER_MS = _FRAME_RATE // 1000
 
 
 def _write_wav(path: str, pcm: np.ndarray, frame_rate: int) -> None:
@@ -62,193 +76,99 @@ def _write_wav(path: str, pcm: np.ndarray, frame_rate: int) -> None:
         w.writeframes(i16.tobytes())
 
 
-def _apply_fades(pcm: np.ndarray, frame_rate: int, fade_ms: int = 30) -> np.ndarray:
-    """C11 asymmetric fades (claude_research_optimal.py:600-606):
-    fade-in = min(max(5, fade_ms//3), len/4) ms, fade-out =
-    min(fade_ms, len/4) ms, linear amplitude ramps."""
-    n = len(pcm)
-    if n == 0:
-        return pcm
-    len_ms = n * 1000 // frame_rate
-    fin_ms = min(max(5, fade_ms // 3), len_ms // 4)
-    fout_ms = min(fade_ms, len_ms // 4)
-    fin = int(fin_ms * frame_rate / 1000)
-    fout = int(fout_ms * frame_rate / 1000)
-    out = pcm.copy()
-    if fin > 0:
-        out[:fin] *= np.linspace(0.0, 1.0, fin, endpoint=False, dtype=np.float32)
-    if fout > 0:
-        out[-fout:] *= np.linspace(1.0, 0.0, fout, endpoint=False, dtype=np.float32)[::-1]
-    return out
-
-
-def _clips_with_samples(clips: DataFrame, audio: DataFrame) -> DataFrame:
-    """Join exported clips to their pair's PCM and slice the clip's
-    ENVELOPE (first piece start → last piece end) JVM-side, carrying
-    the piece spans rebased to the envelope.
-
-    The exported audio is a window of the ASSEMBLED clip — per-run
-    pieces with fades, joined by seam silence
-    (claude_research_optimal.py:308-341, :597). Slicing only the
-    envelope here keeps the Arrow transfer proportional to the clip,
-    not the recording; the per-piece assembly happens in the writer
-    kernel (the last point where decoded samples exist)."""
-    a = audio.select("pair_id", "frame_rate", "samples")
-    env_s = F.col("piece_spans")[0]["s"]
-    env_e = F.element_at("piece_spans", -1)["e"]
-    start_idx = (env_s * _SAMPLES_PER_MS + 1).cast("int")
-    length = ((env_e - env_s) * _SAMPLES_PER_MS).cast("int")
-    rel_spans = F.transform(
-        "piece_spans",
-        lambda x: F.struct(
-            (x["s"] - env_s).alias("s"), (x["e"] - env_s).alias("e")
-        ),
-    )
-    extra = ["acoustic_quality"] if "acoustic_quality" in clips.columns else []
-    return clips.join(a, "pair_id").select(
-        "pair_id",
-        "group_id",
-        F.col("seg_text").alias("clip_text"),
-        "frame_rate",
-        F.slice("samples", start_idx, length).alias("samples"),
-        rel_spans.alias("rel_spans"),
-        "s_ms",
-        "e_ms",
-        *extra,
-    )
-
-
-def _assemble_base(
-    env: np.ndarray, rel_spans, frame_rate: int, fade_ms: int, seam_ms: int
-) -> np.ndarray:
-    """numpy analog of assemble_runs_to_clip
-    (claude_research_optimal.py:308-341): per-piece fades and seam
-    silence between pieces over the envelope slice."""
-    spms = frame_rate // 1000
-    parts: list[np.ndarray] = []
-    last = len(rel_spans) - 1
-    for i, span in enumerate(rel_spans):
-        seg = env[span["s"] * spms : span["e"] * spms]
-        parts.append(_apply_fades(np.asarray(seg, dtype=np.float32), frame_rate, fade_ms))
-        if i != last and seam_ms > 0:
-            parts.append(np.zeros(seam_ms * spms, dtype=np.float32))
-    return np.concatenate(parts) if parts else np.zeros(0, dtype=np.float32)
-
-
-def _slice_ms(base: np.ndarray, s_ms: int, e_ms: int, frame_rate: int) -> np.ndarray:
-    """pydub-style ms slice (clamping, empty on inverted range)."""
-    spms = frame_rate // 1000
-    return base[s_ms * spms : max(s_ms, e_ms) * spms]
-
-
-def _assemble_piece(
-    env: np.ndarray,
-    rel_spans,
-    s_ms: int,
-    e_ms: int,
-    frame_rate: int,
-    fade_ms: int,
-    seam_ms: int,
-) -> np.ndarray:
-    """Base-clip assembly + the validated [s_ms:e_ms] window
-    (claude_research_optimal.py:308-341, :597)."""
-    base = _assemble_base(env, rel_spans, frame_rate, fade_ms, seam_ms)
-    return _slice_ms(base, s_ms, e_ms, frame_rate)
-
-
-def export_clip_files(
-    clips_sliced: DataFrame, out_dir: str, fade_ms: int = P.fade_ms,
-    seam_ms: int = P.seam_silence_ms,
-) -> DataFrame:
-    """K1+K2: one WAV + one TXT per clip, written by the executors.
-
-    Returns the manifest (pair_id, group_id, kind, n_bytes, n_frames).
-    At 100 TB ``out_dir`` is object storage; each task writes only its
-    partition's clips and nothing is collected.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        clip_dir = os.path.join(out_dir, "clips")
-        os.makedirs(clip_dir, exist_ok=True)
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                pcm = _assemble_piece(
-                    np.asarray(r.samples, dtype=np.float32),
-                    r.rel_spans, int(r.s_ms), int(r.e_ms),
-                    int(r.frame_rate), fade_ms, seam_ms,
-                )
-                # final asymmetric fades on the exported piece
-                # (:599-606) — EXCEPT acoustically 'fixed' clips, whose
-                # accepted retry slice is exported unfaded (:633-636)
-                if getattr(r, "acoustic_quality", "clean") != "fixed":
-                    pcm = _apply_fades(pcm, int(r.frame_rate), fade_ms)
-                base = os.path.join(
-                    clip_dir, f"clip_{int(r.pair_id):06d}_{int(r.group_id):04d}"
-                )
-                _write_wav(base + ".wav", pcm, int(r.frame_rate))
-                with open(base + ".txt", "w") as f:
-                    f.write(r.clip_text + "\n")
-                rows.append(
-                    (int(r.pair_id), int(r.group_id), "wav",
-                     os.path.getsize(base + ".wav"), len(pcm))
-                )
-                rows.append(
-                    (int(r.pair_id), int(r.group_id), "txt",
-                     os.path.getsize(base + ".txt"), 0)
-                )
-            yield pd.DataFrame(
-                rows, columns=["pair_id", "group_id", "kind", "n_bytes", "n_frames"]
-            )
-
-    return clips_sliced.mapInPandas(run, MANIFEST_SCHEMA)
+def _write_pair(
+    base: str, pcm: np.ndarray, frame_rate: int, text: str,
+    pair_id: int, group_id: int, prefix: str,
+) -> list[tuple]:
+    """``base``.wav + ``base``.txt and their two manifest rows."""
+    _write_wav(base + ".wav", pcm, frame_rate)
+    with open(base + ".txt", "w") as f:
+        f.write(text + "\n")
+    return [
+        (pair_id, group_id, prefix + "wav", os.path.getsize(base + ".wav"), len(pcm),
+         *_NO_VERDICT),
+        (pair_id, group_id, prefix + "txt", os.path.getsize(base + ".txt"), 0,
+         *_NO_VERDICT),
+    ]
 
 
 def export_full_corpus(
-    clips_sliced: DataFrame, out_dir: str, full_gap_ms: int = P.full_gap_ms,
-    fade_ms: int = P.fade_ms, seam_ms: int = P.seam_silence_ms,
-) -> DataFrame:
-    """K4+K8: per-recording concatenated corpus — ``full_{pair}.wav``
+    pair_id: int, pieces: list[np.ndarray], texts: list[str], out_dir: str,
+    frame_rate: int, full_gap_ms: int,
+) -> list[tuple]:
+    """K4+K8: one recording's concatenated corpus — ``full_{pair}.wav``
     and ``full_{pair}.txt``, each exported piece followed by
     ``full_gap_ms`` of silence INCLUDING the last
     (claude_research_optimal.py:668: ``full_audio += piece +
     silent(full_gap_ms)``), named with the batch wrapper's promoted
-    convention (batch_processor.py:100-110).
+    convention (batch_processor.py:100-110). Called by the
+    per-recording pass with the pieces it just exported, in group_id
+    order. (The reference processes one recording per process, so
+    per-pair IS its 'full'.)"""
+    gap = np.zeros(full_gap_ms * frame_rate // 1000, dtype=np.float32)
+    pcm = np.concatenate([x for piece in pieces for x in (piece, gap)])
+    return _write_pair(
+        os.path.join(out_dir, f"full_{pair_id:06d}"), pcm, frame_rate,
+        "\n".join(texts), pair_id, -1, "full_",
+    )
 
-    One task per pair via applyInPandas — concatenation happens where
-    that pair's clips already live; no global collect. (The reference
-    processes one recording per process, so per-pair IS its 'full'.)
+
+def _export_recording(r, out_dir: str, p: PipelineParams, full_gap_ms: int) -> list[tuple]:
+    """Gate, write and concatenate one recording's clips (see
+    :func:`export_clip_files`)."""
+    pair, sr = int(r.pair_id), int(r.frame_rate)
+    min_dur_ms = int(p.min_dur_s * 1000)
+    rows: list[tuple] = []
+    pieces, texts = [], []
+    for c, base in clip_bases(r, p.fade_ms, p.seam_silence_ms):
+        group = int(c["group_id"])
+        verdict, piece = gate_clip(
+            base, int(c["s_ms"]), int(c["e_ms"]), sr, min_dur_ms, p.fade_ms
+        )
+        rows.append((pair, group, "verdict", None, None, *verdict))
+        if piece is None:
+            continue
+        rows += _write_pair(
+            os.path.join(out_dir, "clips", f"clip_{pair:06d}_{group:04d}"),
+            piece, sr, c["seg_text"], pair, group, "",
+        )
+        pieces.append(piece)
+        texts.append(c["seg_text"])
+    if pieces:
+        rows += export_full_corpus(pair, pieces, texts, out_dir, sr, full_gap_ms)
+    return rows
+
+
+def export_clip_files(
+    recordings: DataFrame, out_dir: str, p: PipelineParams = P,
+    full_gap_ms: int = P.full_gap_ms,
+) -> DataFrame:
+    """K1+K2+K4+K8 behind F7: ONE pass per recording over
+    :func:`operators.dsp.recording_clips` rows. For each clip, in
+    group_id order: cut the envelope, assemble the base clip once, run
+    the acoustic gate and its retry, and write the kept clip's WAV/TXT
+    from the piece the gate computed (faded, or the unfaded retry
+    slice of a 'fixed' clip, :633-636); then the recording's full
+    corpus (:func:`export_full_corpus`).
+
+    Returns ``EXPORT_SCHEMA`` rows: the file manifest plus one
+    ``kind='verdict'`` row per clip. Lazy — files are written when it
+    is materialized, so the caller pins it once. At 100 TB ``out_dir``
+    is object storage; each task writes only its recordings' files and
+    nothing is collected.
     """
 
-    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        os.makedirs(out_dir, exist_ok=True)
-        pdf = pdf.sort_values("group_id")
-        fr = int(pdf["frame_rate"].iloc[0])
-        gap = np.zeros(full_gap_ms * fr // 1000, dtype=np.float32)
-        pieces: list[np.ndarray] = []
-        for r in pdf.itertuples(index=False):
-            piece = _assemble_piece(
-                np.asarray(r.samples, dtype=np.float32),
-                r.rel_spans, int(r.s_ms), int(r.e_ms), fr, fade_ms, seam_ms,
-            )
-            if getattr(r, "acoustic_quality", "clean") != "fixed":
-                piece = _apply_fades(piece, fr, fade_ms)
-            pieces.append(piece)
-            pieces.append(gap)
-        pcm = np.concatenate(pieces) if pieces else np.zeros(0, dtype=np.float32)
-        base = os.path.join(out_dir, f"full_{int(key[0]):06d}")
-        _write_wav(base + ".wav", pcm, fr)
-        with open(base + ".txt", "w") as f:
-            f.write("\n".join(pdf["clip_text"]) + "\n")
-        return pd.DataFrame(
-            [
-                (int(key[0]), -1, "full_wav", os.path.getsize(base + ".wav"), len(pcm)),
-                (int(key[0]), -1, "full_txt", os.path.getsize(base + ".txt"), 0),
-            ],
-            columns=["pair_id", "group_id", "kind", "n_bytes", "n_frames"],
-        )
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        os.makedirs(os.path.join(out_dir, "clips"), exist_ok=True)
+        for pdf in batches:
+            rows = [
+                row
+                for r in pdf.itertuples(index=False)
+                for row in _export_recording(r, out_dir, p, full_gap_ms)
+            ]
+            yield pd.DataFrame(rows, columns=_EXPORT_COLUMNS)
 
-    return clips_sliced.groupBy("pair_id").applyInPandas(assemble, MANIFEST_SCHEMA)
+    return recordings.mapInPandas(run, EXPORT_SCHEMA)
 
 
 def write_clips_tsv(clips: DataFrame, out_dir: str) -> None:
@@ -326,33 +246,37 @@ def export_pipeline_outputs(
     full_gap_ms: int = 500,
 ) -> DataFrame:
     """The complete output contract in one call: run the pipeline and
-    materialize every reference sink under ``out_dir``. Returns the
-    file manifest (clip + full corpus files).
+    write every reference sink under ``out_dir``. Every file exists when
+    this returns; the returned file manifest (clip + full corpus files)
+    reads the held rows, so acting on it writes nothing again.
 
     ``pair_filter``: optional Column predicate on pair_id to bound the
-    exported subset (tests / smoke runs).
+    exported subset (tests / smoke runs); applied before any sample is
+    derived.
     """
-    from ..caching import hold
-    from ..operators.dsp import acoustic_gate
-
     stages = full_pipeline(spark, sf_dir, p)
     exported = stages["exported"]
     too_short = stages["rejected"]
-    if pair_filter is not None:
-        exported = exported.filter(pair_filter)
-        too_short = too_short.filter(pair_filter)
-
     audio = fixtures.audio_samples(spark, sf_dir, _FRAME_RATE)
+    if pair_filter is not None:
+        # a pair_id predicate is pushed below the samples projection
+        exported, too_short, audio = (
+            df.filter(pair_filter) for df in (exported, too_short, audio)
+        )
 
     # F7 acoustic boundary gate — default-on like the reference
-    # (claude_research_optimal.py:411): one DSP pass per clip; verdicts
-    # feed the acoustic log, the rejection log, the shortened 'fixed'
-    # boundaries, and the keep/reject split consistently.
-    verdicts = hold(
-        "acoustic_verdicts",
-        acoustic_gate(
-            _clips_with_samples(exported, audio), min_dur_s=p.min_dur_s
-        ),
+    # (claude_research_optimal.py:411) — and K1/K2/K4/K8 in one pass per
+    # recording, materialized here: the verdicts feed the acoustic log,
+    # the rejection log, the shortened 'fixed' boundaries and the
+    # keep/reject split consistently.
+    rows = hold(
+        "export_rows",
+        export_clip_files(recording_clips(exported, audio), out_dir, p, full_gap_ms),
+        eager=True,
+    )
+    verdicts = rows.filter(F.col("kind") == "verdict")
+    manifest = rows.filter(F.col("kind") != "verdict").select(
+        "pair_id", "group_id", "kind", "n_bytes", "n_frames"
     )
     write_json_records(
         verdicts.select(
@@ -399,22 +323,23 @@ def export_pipeline_outputs(
         F.lit(None).cast("double").alias("confidence"),
     ).unionByName(gate_rejects)
 
-    sliced = _clips_with_samples(final, audio)
-    manifest = export_clip_files(
-        sliced, out_dir, fade_ms=p.fade_ms, seam_ms=p.seam_silence_ms
-    ).unionByName(
-        export_full_corpus(
-            sliced, out_dir, full_gap_ms,
-            fade_ms=p.fade_ms, seam_ms=p.seam_silence_ms,
-        )
-    )
-
     write_clips_tsv(final, out_dir)
     write_json_records(rejected, out_dir, "rejections_json")
     write_word_coverage_csv(final, out_dir)
 
-    n_exported = final.count()
-    n_rejected = rejected.count()
+    # one conditional aggregation: every verdict row is one exported
+    # clip (keep) or one gate rejection; too-short clips never reach
+    # the gate
+    counts = (
+        verdicts.select("verdict")
+        .unionByName(too_short.select(F.col("reason").alias("verdict")))
+        .agg(
+            F.count_if(F.col("verdict") == "keep").alias("exported"),
+            F.count_if(F.col("verdict") != "keep").alias("rejected"),
+        )
+        .first()
+    )
+    n_exported, n_rejected = counts["exported"], counts["rejected"]
     rate = (
         round(100.0 * n_rejected / (n_exported + n_rejected), 2)
         if (n_exported + n_rejected)

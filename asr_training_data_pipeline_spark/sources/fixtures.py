@@ -317,13 +317,13 @@ def audio_samples(spark: SparkSession, sf_dir: str, frame_rate: int = 16000) -> 
 
     Sample i = sin-ish triangle from xxhash64(pair, i div 1000) —
     cheap, deterministic, non-constant. Built lazily as a column
-    expression (one sequence + transform), never collected.
+    expression (one sequence + transform), never collected. Narrow:
+    the span comes from the :func:`doc_word_arrays` row itself (the
+    frame the pipeline pins, so this is a cache read there); a
+    document with no normalizable word has no audio row.
     """
-    words = asr_words(spark, sf_dir)
-    spans = words.groupBy("pair_id").agg(
-        F.max("end").alias("t_end"), F.count("*").alias("n_words")
-    )
-    n_samples = F.ceil(F.col("t_end") * frame_rate).cast("long")
+    arrays = doc_word_arrays(spark, sf_dir).filter(F.size("ends") > 0)
+    n_samples = F.ceil(F.array_max("ends") * frame_rate).cast("long")
     # triangle wave with pair-seeded phase; amplitude in [-1, 1)
     samples = F.transform(
         F.sequence(F.lit(0).cast("long"), n_samples - 1),
@@ -333,9 +333,14 @@ def audio_samples(spark: SparkSession, sf_dir: str, frame_rate: int = 16000) -> 
         ).cast("double")
         / 100.0,
     )
-    return spans.select(
+    return arrays.select(
         "pair_id",
         F.lit(frame_rate).alias("frame_rate"),
         samples.alias("samples"),
-        "n_words",
+        # counted as a long, not cast from the int size(): the optimizer
+        # folds a comparison of a widened int against a literal outside
+        # the int range, and the benchmark's trace counts audio
+        # derivations by exactly such a predicate on n_words
+        # (perfbench/tracing.py AUDIO_MARKER)
+        F.aggregate("ends", F.lit(0).cast("long"), lambda n, _: n + 1).alias("n_words"),
     )

@@ -301,6 +301,46 @@ def test_fixture_doc_level_strip_parity_unicode(spark, tmp_path):
         assert old.exceptAll(new).count() == 0
 
 
+def test_audio_samples_narrow_parity(spark, sf_dir, tmp_path):
+    """audio_samples reads the span and word count off the
+    doc_word_arrays row; the explode + groupBy formulation it replaced
+    stays here as the oracle. A document whose every token normalizes
+    to empty has no words, so neither form may emit a row for it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    docs = pq.read_table(f"{sf_dir}/documents.parquet").slice(0, 30).to_pylist()
+    docs.append(dict(docs[0], doc_id=10**6, text="!!! ... ,, ?? --"))
+    pq.write_table(pa.Table.from_pylist(docs), f"{tmp_path}/documents.parquet")
+    sfd = str(tmp_path)
+
+    spans = fixtures.asr_words(spark, sfd).groupBy("pair_id").agg(
+        F.max("end").alias("t_end"), F.count("*").alias("n_words")
+    )
+    n_samples = F.ceil(F.col("t_end") * 16000).cast("long")
+    samples = F.transform(
+        F.sequence(F.lit(0).cast("long"), n_samples - 1),
+        lambda i: (
+            F.pmod(i + F.pmod(F.xxhash64(F.col("pair_id")), F.lit(997)), F.lit(200))
+            - 100
+        ).cast("double")
+        / 100.0,
+    )
+    old = spans.select(
+        "pair_id", F.lit(16000).alias("frame_rate"), samples.alias("samples"), "n_words"
+    )
+    new = fixtures.audio_samples(spark, sfd)
+    assert [(f.name, f.dataType) for f in new.schema] == [
+        (f.name, f.dataType) for f in old.schema
+    ]
+    assert dict(new.dtypes)["n_words"] == "bigint"
+    assert new.count() == old.count() == 30
+    assert new.filter(F.col("pair_id") == 10**6).count() == 0
+    assert new.exceptAll(old).count() == 0
+    assert old.exceptAll(new).count() == 0
+
+
 def test_narrow_fixture_plan_shape(spark, sf_dir):
     """documents → aligned runs must stay NARROW: one exchange (the
     raw-document repartition for local parallelism), no window, no

@@ -1,9 +1,10 @@
 """Sink-layer round-trips (SURVEY §2.2 K1-K8): export to a tmp dir,
 read every artifact back, check counts/shapes/content against the
-pipeline stages that produced them."""
+pipeline stages that produced them, and pin every output's bytes."""
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import wave
@@ -15,8 +16,64 @@ from pyspark.sql import functions as F
 from asr_training_data_pipeline_spark.plans.pipeline import full_pipeline
 from asr_training_data_pipeline_spark.sinks import export_pipeline_outputs
 
+# sha256 of every output of the sf0.001 export under _pair_filter()
+# (see _output_digests): pins fades, seams, retry slices, gate verdicts
+# and every tabular sink byte for byte, which counts and shapes do not.
+GOLDEN = os.path.join(
+    os.path.dirname(__file__), "golden", "sink_export_sf0.001_mod10.json"
+)
+
+
 def _pair_filter():
     return F.col("pair_id") % 10 == 0  # bounded, deterministic subset
+
+
+def _visible(d):
+    return [e for e in sorted(os.listdir(d)) if not e.startswith((".", "_"))]
+
+
+def _output_digests(out: str, manifest_rows) -> dict[str, str]:
+    """name -> sha256 for every logical output: each clip/full file,
+    summary.json, each TSV/JSON/CSV sink directory as ONE output (its
+    data lines sorted, one header — part-file layout is partitioning,
+    not output), and the sorted manifest."""
+    digests = {}
+    for entry in _visible(out):
+        path = os.path.join(out, entry)
+        if os.path.isdir(path) and entry.endswith(("_tsv", "_csv", "_json")):
+            header, lines = [], []
+            for part in _visible(path):
+                with open(os.path.join(path, part), "rb") as f:
+                    plines = f.read().splitlines(keepends=True)
+                if entry.endswith(("_tsv", "_csv")) and plines:
+                    header, plines = plines[:1], plines[1:]
+                lines += plines
+            data = b"".join(header + sorted(lines))
+            digests[entry] = hashlib.sha256(data).hexdigest()
+        elif os.path.isdir(path):
+            for name in _visible(path):
+                with open(os.path.join(path, name), "rb") as f:
+                    digests[f"{entry}/{name}"] = hashlib.sha256(f.read()).hexdigest()
+        else:
+            with open(path, "rb") as f:
+                digests[entry] = hashlib.sha256(f.read()).hexdigest()
+    rows = sorted(tuple(r) for r in manifest_rows)
+    digests["manifest"] = hashlib.sha256(repr(rows).encode()).hexdigest()
+    return digests
+
+
+def _manifest_path(out: str, pair_id: int, group_id: int, kind: str) -> str:
+    if kind.startswith("full_"):
+        return os.path.join(out, f"full_{pair_id:06d}.{kind[5:]}")
+    return os.path.join(out, "clips", f"clip_{pair_id:06d}_{group_id:04d}.{kind}")
+
+
+def _mtimes(out: str) -> dict[str, int]:
+    return {
+        os.path.join(root, f): os.stat(os.path.join(root, f)).st_mtime_ns
+        for root, _, files in os.walk(out)
+        for f in files
+    }
 
 
 @pytest.fixture(scope="module")
@@ -26,6 +83,18 @@ def exported_dir(spark, sf_dir, tmp_path_factory):
         spark, sf_dir, out, pair_filter=_pair_filter()
     ).toPandas()
     return out, manifest
+
+
+@pytest.fixture(scope="module")
+def small_sf(sf_dir, tmp_path_factory):
+    """The first 20 documents of the test scale factor: small enough to
+    export unfiltered."""
+    import pyarrow.parquet as pq
+
+    d = tmp_path_factory.mktemp("small_sf")
+    docs = pq.read_table(f"{sf_dir}/documents.parquet").slice(0, 20)
+    pq.write_table(docs, f"{d}/documents.parquet")
+    return str(d)
 
 
 def test_manifest_matches_exported_clips(spark, sf_dir, exported_dir):
@@ -127,6 +196,47 @@ def test_summary_and_coverage(spark, sf_dir, exported_dir):
     )
     assert cov.columns == ["word", "count"]
     assert cov.count() > 0
+
+
+def test_export_golden_bytes(sf_dir, exported_dir):
+    if os.path.basename(os.path.normpath(sf_dir)) != "sf0.001":
+        pytest.skip("golden digests are recorded at sf0.001")
+    out, manifest = exported_dir
+    with open(GOLDEN) as f:
+        want = json.load(f)
+    got = _output_digests(out, manifest.itertuples(index=False, name=None))
+    assert sorted(got) == sorted(want)
+    assert [k for k in sorted(want) if got[k] != want[k]] == []
+
+
+def test_files_written_once_when_export_returns(spark, small_sf, tmp_path):
+    """Every file exists when export_pipeline_outputs returns, and
+    acting on the returned manifest (twice) reads the held rows instead
+    of writing any file again."""
+    out = str(tmp_path)
+    manifest = export_pipeline_outputs(spark, small_sf, out)
+    before = _mtimes(out)  # taken before the manifest is touched
+    rows = manifest.collect()
+    assert manifest.count() == len(rows) > 0
+    for r in rows:
+        assert _manifest_path(out, r.pair_id, r.group_id, r.kind) in before
+    assert _mtimes(out) == before
+
+
+def test_pair_filter_exports_same_bytes(spark, small_sf, tmp_path):
+    """A filtered export derives audio only for the selected pairs; its
+    clip and full-corpus files are byte-identical to an unfiltered
+    export's files for those pairs."""
+    full_out, sub_out = str(tmp_path / "all"), str(tmp_path / "sub")
+    full = export_pipeline_outputs(spark, small_sf, full_out).collect()
+    sub = export_pipeline_outputs(spark, small_sf, sub_out, pair_filter=_pair_filter()).collect()
+    assert {r.pair_id for r in sub} == {r.pair_id for r in full if r.pair_id % 10 == 0}
+    assert sorted(sub) == sorted(r for r in full if r.pair_id % 10 == 0)
+    assert any(r.kind == "wav" for r in sub)
+    for r in sub:
+        with open(_manifest_path(sub_out, r.pair_id, r.group_id, r.kind), "rb") as a, \
+                open(_manifest_path(full_out, r.pair_id, r.group_id, r.kind), "rb") as b:
+            assert a.read() == b.read()
 
 
 def test_training_shards_partitioned_and_pruned(spark, sf_dir, tmp_path):
